@@ -7,15 +7,17 @@ acquirer.py:10-22``) — an interval-compressed "have I fetched this" structure
 - shard key = Murmur3(``canonical_url``) mod n_shards (Spark ``hash``), i.e.
   salted by the *full* URL, not the host → a hot host (30%% of URLs in the
   fixture) spreads uniformly across shards; no shard hotspot.
-- per-shard bloom built with ``applyInPandas`` (numpy bit ops over Arrow
-  batches — no per-row Python); bit positions from the double-hashing scheme
-  idx_i = (h1 + i·h2) mod m with h1 = xxhash64(url), h2 = xxhash64(url, 1)
-  computed JVM-side.
-- probe via ``cogroup().applyInPandas`` on the shard key (the scale path:
-  frontier and bloom shards co-partitioned by the same key; one shuffle of
-  the frontier, none of the pages). Bloom answers "definitely unseen" /
-  "maybe seen"; only maybe-seen rows continue to the exact anti-join
-  backstop — the bloom can never FALSE-DROP a URL (SURVEY.md §5.4 test 4).
+- bit positions from the double-hashing scheme idx_i = (h1 + i·h2) mod m
+  (uint64 wraparound) with h1 = xxhash64(url), h2 = xxhash64(url, 1).
+- build, merge and probe are Spark JVM expressions only — no row crosses to
+  a Python worker. ``bitmap_construct_agg`` / ``bitmap_or_agg`` set and OR
+  bits in 4096-byte buckets with the filter's own layout (byte p>>3,
+  bit p&7), so a shard is its buckets concatenated; the probe joins each
+  frontier row to its shard's bloom rows (left join on the salted shard
+  key, one row per shard) and tests the k bits with ``substring``. Bloom
+  answers "definitely unseen" / "maybe seen"; only maybe-seen rows continue
+  to the exact anti-join backstop — the bloom can never FALSE-DROP a URL
+  (SURVEY.md §5.4 test 4).
 
 Sizing (10^10-URL frontier): 10 bits/key ≈ 12.5 GB total ⇒ ~200 shards of
 64 MB; shards live in the round checkpoint and OR-merge incrementally (the
@@ -29,10 +31,9 @@ accumulated occupancy pushes the estimated FPR past its threshold
 from __future__ import annotations
 
 import math
+from decimal import Decimal
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,6 +56,14 @@ DEFAULT_M_BITS = 1 << 20  # 128 KiB per shard (test scale)
 DEFAULT_K = 5
 DEFAULT_SHARDS = 32
 
+# bitmap_construct_agg / bitmap_or_agg work on fixed 4096-byte buckets
+# (bit p of a bucket = byte p>>3, bit p&7: the filter's own byte layout)
+_BUCKET_SHIFT = 15  # 32,768 bits per bucket
+_BUCKET_MASK = (1 << _BUCKET_SHIFT) - 1
+_BUCKET_BYTES = 1 << (_BUCKET_SHIFT - 3)
+_BUCKET_HEX = 2 * _BUCKET_BYTES  # hex digits per bucket
+_U64 = Decimal(1 << 64)
+
 
 def _with_hashes(df: DataFrame, n_shards: int) -> DataFrame:
     c = F.col("canonical_url")
@@ -63,12 +72,49 @@ def _with_hashes(df: DataFrame, n_shards: int) -> DataFrame:
     ).withColumn("__h2", F.xxhash64(c, F.lit(1)))
 
 
-def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m_bits: int) -> np.ndarray:
-    """(n, k) bit positions via double hashing, uint64 wraparound arithmetic."""
-    h1u = h1.astype(np.uint64)
-    h2u = h2.astype(np.uint64)
-    i = np.arange(k, dtype=np.uint64)[None, :]
-    return ((h1u[:, None] + i * h2u[:, None]) % np.uint64(m_bits)).astype(np.int64)
+def _positions(k: int, m_bits: int) -> Column:
+    """array<int> of the k bit positions (h1 + i·h2 mod 2^64) mod m_bits over
+    ``__h1``/``__h2``. The signed-long hashes are congruent to their uint64
+    values mod 2^64, so exact decimal arithmetic reproduces the uint64
+    wraparound without long overflow (which ANSI mode raises on)."""
+    h1 = F.col("__h1").cast("decimal(20,0)")
+    h2 = F.col("__h2").cast("decimal(20,0)")
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda i: F.pmod(F.pmod(h1 + i * h2, F.lit(_U64)), F.lit(m_bits)).cast("int"),
+    )
+
+
+def _assemble(per_shard: DataFrame) -> DataFrame:
+    """Per-shard ``__buckets`` (array of (b, 4096-byte bitmap)) → BLOOM_SCHEMA
+    rows. The buckets are joined in order as hex, each left-padded with
+    zeros over the gap since the previous one, and the result right-padded
+    (or cut) to m_bits/8 bytes. (``concat`` takes no array, and folding a
+    binary concat would copy quadratically.)"""
+    srt = per_shard.withColumn("__buckets", F.array_sort("__buckets"))
+    hexed = F.transform(
+        "__buckets",
+        lambda x, j: F.lpad(
+            F.hex(x["bm"]),
+            (x["b"] - F.coalesce(F.get("__buckets", j - 1)["b"], F.lit(-1))) * _BUCKET_HEX,
+            "0",
+        ),
+    )
+    cols = {
+        "shard": F.col("__shard"),
+        "bloom": F.unhex(F.rpad(F.array_join(hexed, ""), F.shiftright("m_bits", 2), "0")),
+    }
+    # coalescing with a never-taken literal makes every column non-nullable,
+    # as BLOOM_SCHEMA declares and the parquet files have always recorded
+    return srt.select(
+        *(
+            F.coalesce(
+                cols.get(f.name, F.col(f.name)),
+                F.lit(b"" if f.name == "bloom" else 0).cast(f.dataType),
+            ).alias(f.name)
+            for f in BLOOM_SCHEMA.fields
+        )
+    )
 
 
 class BloomSeen:
@@ -132,90 +178,80 @@ class BloomSeen:
     # -- build -------------------------------------------------------------
     def build_delta(self, urls: DataFrame) -> DataFrame:
         """canonical_url DF → bloom shard table (one row per non-empty shard)."""
-        m_bits, k, n_shards = self.m_bits, self.k, self.n_shards
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            arr = np.zeros(m_bits // 8, dtype=np.uint8)
-            pos = _positions(pdf["__h1"].to_numpy(), pdf["__h2"].to_numpy(), k, m_bits)
-            np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["__shard"].iloc[0])],
-                    "bloom": [arr.tobytes()],
-                    "n_items": [len(pdf)],
-                    "n_shards": [n_shards],
-                    "m_bits": [m_bits],
-                    "k": [k],
-                }
-            )
-
-        return (
-            _with_hashes(urls.select("canonical_url"), self.n_shards)
-            .groupBy("__shard")
-            .applyInPandas(build, BLOOM_SCHEMA)
+        pos = _with_hashes(urls.select("canonical_url"), self.n_shards).select(
+            "__shard", F.explode(_positions(self.k, self.m_bits)).alias("p")
         )
+        buckets = pos.groupBy("__shard", F.shiftright("p", _BUCKET_SHIFT).alias("b")).agg(
+            F.bitmap_construct_agg(F.col("p").bitwiseAND(_BUCKET_MASK)).alias("bm"),
+            F.count("*").alias("n"),
+        )
+        per_shard = buckets.groupBy("__shard").agg(
+            F.collect_list(F.struct("b", "bm")).alias("__buckets"),
+            # every row contributed exactly k positions
+            (F.sum("n") / self.k).cast("long").alias("n_items"),
+            F.lit(self.n_shards).alias("n_shards"),
+            F.lit(self.m_bits).alias("m_bits"),
+            F.lit(self.k).alias("k"),
+        )
+        return _assemble(per_shard)
 
     def merge(self, blooms: DataFrame) -> DataFrame:
-        """OR-merge bloom rows per shard (compaction / round accumulation)."""
+        """OR-merge bloom rows per shard (compaction / round accumulation).
 
-        def orit(pdf: pd.DataFrame) -> pd.DataFrame:
+        ``bitmap_or_agg`` ORs one 4096-byte bucket, so each row is cut into
+        bucket chunks, all-zero chunks dropped (chunk 0 kept: it carries the
+        row's item count), OR-ed per (shard, bucket) and reassembled."""
+        chunks = blooms.select(
+            "shard", "n_items", F.struct("n_shards", "m_bits", "k").alias("geo"),
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.shiftright(F.length("bloom") - 1, _BUCKET_SHIFT - 3)),
+                    lambda b: F.col("bloom").substr(b * _BUCKET_BYTES + 1, F.lit(_BUCKET_BYTES)),
+                )
+            ).alias("b", "chunk"),
+        ).filter((F.col("b") == 0) | (F.bitmap_count("chunk") > 0))
+        buckets = chunks.groupBy("shard", "b").agg(
+            F.bitmap_or_agg("chunk").alias("bm"),
+            F.sum(F.when(F.col("b") == 0, F.col("n_items"))).alias("n"),
+            F.min("geo").alias("lo"),
+            F.max("geo").alias("hi"),
+        )
+        per_shard = buckets.groupBy(F.col("shard").alias("__shard")).agg(
+            F.collect_list(F.struct("b", "bm")).alias("__buckets"),
+            F.sum("n").alias("n_items"),
             # OR-merging rows built under different geometries is meaningless
-            if pdf["m_bits"].nunique() != 1 or pdf["k"].nunique() != 1:
-                raise ValueError("bloom merge across mismatched filter params")
-            arrs = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bloom"]]
-            merged = np.bitwise_or.reduce(arrs)
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "bloom": [merged.tobytes()],
-                    "n_items": [int(pdf["n_items"].sum())],
-                    "n_shards": [int(pdf["n_shards"].iloc[0])],
-                    "m_bits": [int(pdf["m_bits"].iloc[0])],
-                    "k": [int(pdf["k"].iloc[0])],
-                }
-            )
-
-        return blooms.groupBy("shard").applyInPandas(orit, BLOOM_SCHEMA)
+            F.when(
+                F.min("lo") != F.max("hi"),
+                F.raise_error(F.lit("bloom merge across mismatched filter params")),
+            ).otherwise(F.min("lo")).alias("geo"),
+        ).select("__shard", "__buckets", "n_items", "geo.*")
+        return _assemble(per_shard)
 
     # -- probe -------------------------------------------------------------
     def probe(self, frontier: DataFrame, blooms: DataFrame) -> DataFrame:
         """frontier + boolean ``maybe_seen`` column.
 
-        Co-grouped by shard: the frontier shuffles once on the salted shard
-        key; each task touches exactly one bloom shard. Rows with
+        Each frontier row joins (left, on the salted shard key) the list of
+        its shard's bloom rows; a position counts as set when any of them
+        has the bit (rows of one shard OR together). Rows with
         maybe_seen = false are *definitely* unseen (skip the exact
         anti-join); true rows must be confirmed exactly.
         """
-        m_bits, k = self.m_bits, self.k
         fr = _with_hashes(frontier, self.n_shards)
-        cols = [f.name for f in fr.schema.fields]
-        out_schema = T.StructType(
-            [f for f in fr.schema.fields if not f.name.startswith("__")]
-            + [T.StructField("maybe_seen", T.BooleanType(), False)]
+        keep = [c for c in fr.columns if not c.startswith("__")]
+        per_shard = blooms.groupBy(F.col("shard").alias("__shard")).agg(
+            F.collect_list("bloom").alias("__blooms")
         )
-        keep = [c for c in cols if not c.startswith("__")]
 
-        def check(key, fdf_iter_or_df, bdf=None):  # cogroup signature (left, right)
-            fdf, bdf = fdf_iter_or_df, bdf
-            if len(fdf) == 0:
-                return pd.DataFrame(columns=keep + ["maybe_seen"])
-            if bdf is None or len(bdf) == 0:
-                out = fdf[keep].copy()
-                out["maybe_seen"] = False
-                return out
-            arrs = [np.frombuffer(b, dtype=np.uint8) for b in bdf["bloom"]]
-            arr = np.bitwise_or.reduce(arrs) if len(arrs) > 1 else arrs[0]
-            pos = _positions(fdf["__h1"].to_numpy(), fdf["__h2"].to_numpy(), k, m_bits)
-            bits = (arr[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-            out = fdf[keep].copy()
-            out["maybe_seen"] = bits.all(axis=1)
-            return out
+        def bit(bloom: Column, p: Column) -> Column:
+            byte = F.conv(F.hex(bloom.substr(F.shiftright(p, 3) + 1, F.lit(1))), 16, 10)
+            return F.getbit(byte.cast("int"), p.bitwiseAND(7)) == 1
 
-        def cogroup_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            return check(None, left, right)
-
-        return (
-            fr.groupby("__shard")
-            .cogroup(blooms.groupby("shard"))
-            .applyInPandas(cogroup_fn, out_schema)
+        maybe = F.forall(
+            _positions(self.k, self.m_bits),
+            lambda p: F.exists("__blooms", lambda b: bit(b, p)),
+        )
+        # no bloom row for the shard → null → definitely unseen
+        return fr.join(per_shard, "__shard", "left").select(
+            *keep, F.coalesce(maybe, F.lit(False)).alias("maybe_seen")
         )

@@ -79,26 +79,40 @@ def _warm_parse_exprs(spark: SparkSession) -> None:
         pass
 
 
+def _swap_bloom(df: DataFrame, path: str) -> None:
+    """Replace the cuckoo/bloom shard dir ``path`` (``rounds/K/bloom``) with
+    ``df``: write a ``.__evict`` sibling, then two cheap renames instead of
+    rmtree-then-rename, so every crash point leaves a state that
+    _recover_bloom_swap rolls forward (to the new dir) or back (to
+    ``.__old``)."""
+    tmp, old = path + ".__evict", path + ".__old"
+    df.write.mode("overwrite").parquet(tmp)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old)
+
+
 def _recover_bloom_swap(path: str) -> None:
-    """Finish an interrupted marker-less parquet-dir swap (the cuckoo/bloom
-    shard dir under ``rounds/K/bloom``). ``_SUCCESS`` is the commit marker:
-    roll forward to a fully-written ``.__evict`` sibling, else roll back to
-    ``.__old``, then drop leftovers. A dropped healthy ``.__evict`` (crash
-    before the first rename) only loses a prefilter cleanup — the exact
-    anti-join backstop keeps results identical."""
+    """Finish an interrupted marker-less parquet-dir swap (_swap_bloom).
+    ``_SUCCESS`` is the commit marker: roll forward to a fully-written
+    ``.__evict`` sibling, else roll back to ``.__old``, then drop leftovers.
+    A dropped healthy ``.__evict`` (crash before the first rename) only
+    loses a prefilter cleanup or re-size — the exact anti-join backstop
+    keeps results identical. ``.__resized`` is the new-dir name of older
+    releases' bloom re-size (rmtree, then rename), rolled forward alike."""
 
     def ok(d: str) -> bool:
         return os.path.exists(os.path.join(d, "_SUCCESS"))
 
-    tmp, old = path + ".__evict", path + ".__old"
+    tmp, old, resized = path + ".__evict", path + ".__old", path + ".__resized"
     if not ok(path):
-        src = tmp if ok(tmp) else old if ok(old) else None
+        src = next((d for d in (tmp, resized, old) if ok(d)), None)
         if src is not None:
             if os.path.exists(path):
                 shutil.rmtree(path)
             os.rename(src, path)
     if ok(path):
-        for d in (tmp, old):
+        for d in (tmp, old, resized):
             shutil.rmtree(d, ignore_errors=True)
 
 OUTPUTS = [
@@ -369,15 +383,7 @@ def evict_seen(
                 updated = cs.delete_urls(
                     spark.read.schema(cs.SCHEMA).parquet(bloom_path), delete_set
                 )
-                tmp = bloom_path + ".__evict"
-                old = bloom_path + ".__old"
-                updated.write.mode("overwrite").parquet(tmp)
-                # two cheap renames instead of rmtree-then-rename: every
-                # crash point leaves a recoverable state for
-                # _recover_bloom_swap (roll forward to tmp / back to old)
-                os.rename(bloom_path, old)
-                os.rename(tmp, bloom_path)
-                shutil.rmtree(old)
+                _swap_bloom(updated, bloom_path)
     return as_of
 
 
@@ -444,10 +450,9 @@ def run_crawl(
     rebuilds the bloom RIGHT-SIZED (BloomSeen.sized, 4× headroom) from the
     exact seen set it is compacting anyway — without this, fixed shards
     silently saturate (FPR→1) and every probe falls through to the exact
-    anti-join backstop. Rebuild lands in a temp dir and renames over the
-    old bloom; a crash between the two leaves NO bloom for that round,
-    which resume handles by rebuilding from the full seen state (the safe
-    direction — a half-written bloom could false-drop URLs).
+    anti-join backstop. The rebuild commits through _swap_bloom, so a
+    crash at any point resumes with either the re-sized or the previous
+    bloom, never none (a half-written bloom could false-drop URLs).
     """
     if use_bloom and bloom_filter is None:
         bloom_filter = BloomSeen()
@@ -668,13 +673,10 @@ def run_crawl(
                     bloom_filter = BloomSeen.sized(
                         max(4 * n_inserted, 1024), target_fpr=bloom_target_fpr
                     )
-                    bloom_out = os.path.join(rd, "bloom")
-                    tmp_out = bloom_out + ".__resized"
-                    bloom_filter.build_delta(
-                        full.select("canonical_url")
-                    ).write.mode("overwrite").parquet(tmp_out)
-                    shutil.rmtree(bloom_out, ignore_errors=True)
-                    os.rename(tmp_out, bloom_out)
+                    _swap_bloom(
+                        bloom_filter.build_delta(full.select("canonical_url")),
+                        os.path.join(rd, "bloom"),
+                    )
 
     pages_k.unpersist()
     return {

@@ -203,6 +203,14 @@ def test_bloom_swap_crash_recovery(spark, tmp_path):
     _recover_bloom_swap(base)
     assert {r["id"] for r in spark.read.parquet(base).collect()} == {5, 6, 7}
 
+    # older releases re-sized the bloom by rmtree then rename of a
+    # .__resized dir: a crash between the two rolls forward to it
+    shutil.rmtree(base)
+    mk(base + ".__resized", 200)
+    _recover_bloom_swap(base)
+    assert {r["id"] for r in spark.read.parquet(base).collect()} == {200, 201, 202}
+    assert not os.path.exists(base + ".__resized")
+
 
 def test_double_evict_rewrite_is_staged(spark, tmp_path, monkeypatch):
     """Review r4: re-evicting at the same stamp rewrites the committed
