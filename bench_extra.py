@@ -7,8 +7,8 @@ Modes:
                                              # noop sink (guide §1.4), N reps
   python bench_extra.py explain [name ...]   # write explain("formatted") to
                                              # plans/r08/<name>_<tag>.txt
-  python bench_extra.py crawl               # one crawl (bench workload) with
-                                             # SPARK_GRAFT_TRACE honoring env
+  python bench_extra.py crawl               # one crawl (bench workload);
+                                             # per-layer split: perfbench/run.py --trace 1
 
 Env:
   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,

@@ -2,8 +2,10 @@
 
 A from-scratch re-expression of the query/data-processing capabilities of the
 reference crawl scheduler (touuki/colymer-acquirers) as idiomatic PySpark:
-DataFrame/SQL plans, Arrow-vectorized pandas UDFs, window-ranked politeness,
-salted-bloom URL-seen sharding, and round-checkpointed resumable crawl loops.
+DataFrame/SQL plans with the frozen canonicalize/parse/envelope rules as JVM
+column expressions (their pandas versions are the test oracle), window-ranked
+politeness, salted-bloom URL-seen sharding, and round-checkpointed resumable
+crawl loops.
 
 Reference semantics are documented per-module with `file:line` cites into
 `/root/reference` (studied for behavior only; no code copied).

@@ -1,4 +1,10 @@
-"""Frozen HTML text/link extraction — Arrow-vectorized pandas UDFs.
+"""Frozen HTML text/link/title extraction rules — the pure-Python oracle.
+
+The production implementation is ``parse_expr.parse_page_expr`` (JVM
+regexp/HOF expressions; the html never leaves the JVM). The pandas
+``*_series`` / scalar ``*_one`` functions here are the ORACLE: ``pyref``
+and the expr-mirror/fuzz tests call them, and the regex constants below are
+shared with the JVM mirror so both sides apply the same frozen rule.
 
 Reference analogs:
 - text extraction: the ``content`` field choice (``colymer/acquirers/
@@ -49,10 +55,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # explicit char class (not \s): Python-re \s is unicode-wide while Java \s is
 # ASCII-only — the frozen rule pins the exact whitespace set so the pandas
@@ -66,8 +68,8 @@ _WS_RE = _WS_CLASS + "+"
 # bandwidth-bound at high core counts; every full-string pass costs).
 # These SINGLE-PASS semantics are the frozen rule (v2 — see the RULE
 # VERSION NOTE in the module docstring for the v1 delta on overlapping
-# constructs); all three implementations — pandas, JVM, pyref — share
-# this constant.
+# constructs); the pandas oracle (which pyref calls) and the JVM
+# mirror share this constant.
 _STRIP_ALL_RE = "(?is)" + "|".join(
     [
         r"<script\b.*?</script" + _WS_CLASS + r"*>",
@@ -193,63 +195,9 @@ def extract_links_one(html: str | bytes | None, base_url: str | None) -> list[st
 
 
 def extract_links_series(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    """Arrow-batched link extraction: Series[html], Series[url] → Series[list[str]]."""
+    """Batched link extraction: Series[html], Series[url] → Series[list[str]]."""
     return pd.Series(
         [extract_links_one(h, u) for h, u in zip(html, base_url)],
         index=html.index,
         dtype="object",
     )
-
-
-@pandas_udf(T.StringType())
-def _extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_series(html)
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def _extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    return extract_links_series(html, base_url)
-
-
-_PARSE_SCHEMA = T.StructType(
-    [
-        T.StructField("content", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("links", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-
-@pandas_udf(_PARSE_SCHEMA)
-def _parse_page_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "content": extract_text_series(html),
-            "title": extract_title_series(html),
-            "links": extract_links_series(html, base_url),
-        }
-    )
-
-
-def extract_text(col: Column | str) -> Column:
-    """Spark column: frozen text extraction from html (binary or string)."""
-    return _extract_text_udf(F.col(col) if isinstance(col, str) else col)
-
-
-def extract_links(html: Column | str, base_url: Column | str) -> Column:
-    """Spark column: array<string> of absolutized hrefs in document order."""
-    h = F.col(html) if isinstance(html, str) else html
-    b = F.col(base_url) if isinstance(base_url, str) else base_url
-    return _extract_links_udf(h, b)
-
-
-def parse_page(html: Column | str, base_url: Column | str) -> Column:
-    """struct<content, links> in ONE Arrow round-trip.
-
-    The html column crosses the JVM↔Python boundary exactly once per page —
-    on syscall-expensive hosts (microVM sandboxes) the socket transfer, not
-    the regex work, is the cost that matters.
-    """
-    h = F.col(html) if isinstance(html, str) else html
-    b = F.col(base_url) if isinstance(base_url, str) else base_url
-    return _parse_page_udf(h, b)

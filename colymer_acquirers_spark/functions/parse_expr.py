@@ -1,7 +1,7 @@
 """JVM-expression implementations of the frozen text/link extraction rules.
 
-Same FROZEN RULES as ``functions/parse.py`` (the pandas/Arrow reference
-implementation used by pyref), re-expressed as pure Spark column expressions:
+Same FROZEN RULES as ``functions/parse.py`` (the pandas oracle that pyref
+calls), re-expressed as pure Spark column expressions:
 ``regexp_replace`` chains, ``regexp_extract_all`` and higher-order array
 functions (``transform``/``aggregate``/``filter``). Whole-stage-codegen'd,
 zero JVM↔Python traffic — on syscall-expensive hosts the Arrow socket is the
@@ -228,7 +228,7 @@ def extract_links_expr(
 def parse_page_expr(
     html: Column | str, base_url: Column | str, is_binary: bool = True
 ) -> Column:
-    """struct<content, links> — JVM-only analog of ``parse.parse_page``.
+    """struct<content, title, links> of a page — the crawl round's parse.
 
     The by-name form is memoized: the expression tree is ~10^3 py4j calls
     to build (~1s of serial driver time), identical every round, and an

@@ -78,9 +78,15 @@ def minhash_signatures(
     them back per candidate pair) pass their persisted frame here so one
     tokenize+distinct pass over the corpus serves both consumers instead
     of two full text scans (r8 session 3; guide §2.3/§5). Values are
-    identical by construction.
+    identical by construction. A frame whose columns are not exactly
+    ``(id_col, "__ws")`` raises ``ValueError``.
     """
     if word_sets is not None:
+        if tuple(word_sets.columns) != (id_col, "__ws"):
+            raise ValueError(
+                f"word_sets must have exactly the columns ({id_col!r}, '__ws'), "
+                f"got {tuple(word_sets.columns)}"
+            )
         words = word_sets.select(
             F.col(id_col), F.explode(F.col("__ws")).alias("w")
         )

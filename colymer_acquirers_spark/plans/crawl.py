@@ -25,7 +25,6 @@ from colymer_acquirers_spark.operators.seen import compact_seen
 from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
 from colymer_acquirers_spark.operators.seen_cuckoo import CuckooSeen
 from colymer_acquirers_spark.plans.round import (
-    _trace,
     bootstrap_frontier,
     keyed_pages,
     run_round,
@@ -35,6 +34,12 @@ from colymer_acquirers_spark.sources.tables import (
     read_table,
     write_table,
 )
+
+# bloom auto-size target (see run_crawl)
+BLOOM_TARGET_FPR = 0.01
+
+# everything a run persists under its workdir; resume=False clears it all
+STATE_DIRS = ("rounds", "seen_compact", "pinned_compact", "evictions", "initial_seen")
 
 
 def _warm_parse_exprs(spark: SparkSession) -> None:
@@ -115,15 +120,6 @@ def _recover_bloom_swap(path: str) -> None:
         for d in (tmp, old, resized):
             shutil.rmtree(d, ignore_errors=True)
 
-OUTPUTS = [
-    "crawl_order",
-    "seen_delta",
-    "articles",
-    "attachments_new",
-    "lineage",
-    "frontier_next",
-]
-
 
 def _round_dir(workdir: str, k: int) -> str:
     return os.path.join(workdir, "rounds", str(k))
@@ -147,13 +143,6 @@ def committed_rounds(workdir: str) -> list[int]:
 def read_manifest(workdir: str, k: int) -> dict:
     with open(_manifest_path(workdir, k)) as f:
         return json.load(f)
-
-
-def _read_or_empty(spark: SparkSession, paths: list[str], schema) -> DataFrame:
-    existing = [p for p in paths if os.path.exists(p)]
-    if not existing:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*existing)
 
 
 def read_output(spark: SparkSession, workdir: str, name: str, upto: int | None = None) -> DataFrame:
@@ -300,7 +289,6 @@ def evict_seen(
     spark: SparkSession,
     workdir: str,
     urls: DataFrame,
-    clean_prefilter: bool = True,
 ) -> int:
     """Remove urls from the seen state so a later run RE-FETCHES them —
     the re-crawl primitive (reference analog: a platform item is
@@ -337,7 +325,7 @@ def evict_seen(
     # same stamp) keeps delete_urls to urls that are actually inserted,
     # exactly once, no matter how often evict_seen is re-invoked.
     delete_set = None
-    if clean_prefilter and done:
+    if done:
         exact = read_seen(spark, workdir, as_of)
         if exact is not None:
             # lineage TRUNCATION is load-bearing here, not an optimization:
@@ -427,15 +415,12 @@ def run_crawl(
     max_rounds: int = 10,
     default_budget: int = 1_000_000,
     resume: bool = True,
-    parse_impl: str = "jvm",
     boundary_mode: str = "continue",
     use_bloom: bool = False,
     bloom_filter: "BloomSeen | None" = None,
     initial_seen: DataFrame | None = None,
     metrics_full: bool = True,
     compact_every: int = 8,
-    bloom_target_fpr: float = 0.01,
-    bloom_autosize: bool = True,
     reseed: DataFrame | None = None,
 ) -> dict:
     """Run (or resume) up to ``max_rounds`` crawl rounds; returns summary.
@@ -445,8 +430,12 @@ def run_crawl(
     (the bloom is a prefilter with an exact backstop — never changes
     results, only the amount of exact anti-join work).
 
+    ``resume=False`` discards every piece of state an earlier run left in
+    ``workdir`` (rounds, compactions, evictions, the persisted initial
+    seen set) before the crawl starts.
+
     Bloom auto-sizing: when the accumulated seen count pushes the filter's
-    estimated FPR past 2× ``bloom_target_fpr``, the next compaction
+    estimated FPR past 2× ``BLOOM_TARGET_FPR``, the next compaction
     rebuilds the bloom RIGHT-SIZED (BloomSeen.sized, 4× headroom) from the
     exact seen set it is compacting anyway — without this, fixed shards
     silently saturate (FPR→1) and every probe falls through to the exact
@@ -463,6 +452,9 @@ def run_crawl(
     threading.Thread(
         target=_warm_parse_exprs, args=(spark,), daemon=True
     ).start()
+    if not resume:
+        for name in STATE_DIRS:
+            shutil.rmtree(os.path.join(workdir, name), ignore_errors=True)
     # pre-existing-state count enters the occupancy estimate exactly once
     n_seen_base = 0
 
@@ -502,10 +494,7 @@ def run_crawl(
 
         robots = compile_robots(robots)
 
-    done = committed_rounds(workdir) if resume else []
-    if not resume and os.path.isdir(os.path.join(workdir, "rounds")):
-        shutil.rmtree(os.path.join(workdir, "rounds"))
-        done = []
+    done = committed_rounds(workdir)
 
     if done:
         last = done[-1]
@@ -595,7 +584,6 @@ def run_crawl(
             rank_offset,
             out_dir=rd,
             default_budget=default_budget,
-            parse_impl=parse_impl,
             boundary_mode=boundary_mode,
             bloom=bloom,
             bloom_filter=bloom_filter,
@@ -621,9 +609,6 @@ def run_crawl(
             delta = bloom_filter.build_delta(delta_src)
             acc = delta if bloom is None else bloom_filter.merge(bloom.unionByName(delta))
             acc.write.mode("overwrite").parquet(os.path.join(rd, "bloom"))
-        import time as _time
-
-        _tb = _time.monotonic()
         frontier = spark.read.schema(schemas.FRONTIER).parquet(
             os.path.join(rd, "frontier_next")
         )
@@ -636,10 +621,8 @@ def run_crawl(
         with open(tmp, "w") as f:
             json.dump({"round": rnd, "rank_offset_next": rank_offset, "metrics": metrics}, f)
         os.replace(tmp, _manifest_path(workdir, rnd))
-        _tb = _trace(f"round{rnd} commit+reread", _tb)
         for df in rr.persisted:
             df.unpersist()
-        _trace(f"round{rnd} unpersist", _tb)
         # seen compaction every K committed rounds (reference analog: block
         # splicing, acquirer.py:46-58): rewrite base ∪ deltas into one
         # table so per-round seen reads stay O(compact_every), not O(R)
@@ -662,16 +645,11 @@ def run_crawl(
             # arithmetic: accumulated inserts = rank_offset + initial seen).
             # Bloom-only: a cuckoo filter's stash absorbs overload exactly,
             # so it degrades in speed, not correctness
-            if (
-                use_bloom
-                and bloom_autosize
-                and isinstance(bloom_filter, BloomSeen)
-                and full is not None
-            ):
+            if use_bloom and isinstance(bloom_filter, BloomSeen) and full is not None:
                 n_inserted = rank_offset + n_seen_base
-                if bloom_filter.estimated_fpr(n_inserted) > 2 * bloom_target_fpr:
+                if bloom_filter.estimated_fpr(n_inserted) > 2 * BLOOM_TARGET_FPR:
                     bloom_filter = BloomSeen.sized(
-                        max(4 * n_inserted, 1024), target_fpr=bloom_target_fpr
+                        max(4 * n_inserted, 1024), target_fpr=BLOOM_TARGET_FPR
                     )
                     _swap_bloom(
                         bloom_filter.build_delta(full.select("canonical_url")),

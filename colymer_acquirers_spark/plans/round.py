@@ -26,23 +26,10 @@ wall-clock at the small end.
 
 from __future__ import annotations
 
-import os
 import functools
-import time
+import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-
-# SPARK_GRAFT_TRACE=1 → print driver-side phase timings (plan construction
-# vs pooled execution vs bookkeeping) per round; the knob behind the
-# round-boundary gap attribution in BENCH/gap_audit.py
-_TRACE = os.environ.get("SPARK_GRAFT_TRACE", "") == "1"
-
-
-def _trace(label: str, t0: float) -> float:
-    t1 = time.monotonic()
-    if _TRACE:
-        print(f"[trace] {label}: {(t1 - t0)*1000:.0f} ms", flush=True)
-    return t1
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -53,7 +40,6 @@ from colymer_acquirers_spark.functions.envelope_expr import (
     envelope_expr,
     page_content_type_expr,
 )
-from colymer_acquirers_spark.functions.parse import parse_page
 from colymer_acquirers_spark.functions.parse_expr import parse_page_expr
 from colymer_acquirers_spark.operators.politeness import politeness_split, robots_filter
 from colymer_acquirers_spark.operators.ranking import global_rank
@@ -69,16 +55,14 @@ SORT_KEYS = ["priority", "depth", "canonical_url"]
 
 
 @fragments.register
-@functools.lru_cache(maxsize=4)
-def _round_cols(parse_impl: str) -> dict:
+@functools.lru_cache(maxsize=1)
+def _round_cols() -> dict:
     """Plan-invariant Column fragments of a crawl round, built ONCE per
-    session per parse impl. Column objects are immutable unresolved-
-    expression wrappers, safe to reuse across DataFrames and rounds;
-    rebuilding them every round cost ~2,000 py4j round trips ≈ 1.3-1.8 s of
+    session. Column objects are immutable unresolved-expression wrappers,
+    safe to reuse across DataFrames and rounds; rebuilding them every round cost ~2,000 py4j round trips ≈ 1.3-1.8 s of
     zero-running-task driver time per round — the round-boundary gaps in
     BENCH/gap_audit.py and a core-count-independent Amdahl term at any
     cluster size."""
-    parse_fn = parse_page_expr if parse_impl == "jvm" else parse_page
     return {
         "crawl_order": (
             "rank",
@@ -91,7 +75,7 @@ def _round_cols(parse_impl: str) -> dict:
         "parsed1": (
             "canonical_url", "url", "priority", "depth", "lang", "warc_ts",
             "__round",
-            parse_fn("html", "canonical_url").alias("p"),
+            parse_page_expr("html", "canonical_url").alias("p"),
             envelope_expr("html", "canonical_url").alias("env"),
         ),
         "parsed2": (
@@ -173,23 +157,19 @@ def bootstrap_frontier(seeds: DataFrame) -> DataFrame:
     return merge_frontier(f).withColumn("host", host_of("canonical_url"))
 
 
-def keyed_pages(pages: DataFrame, cluster: bool = True) -> DataFrame:
-    """pages + canonical_url join key (null-canonical pages unreachable).
-
-    cluster=True pre-partitions by the join key (the in-memory analog of
-    storing the warehouse pages table bucketed by canonical_url): the
-    cached layout then SATISFIES every round's fetch-join distribution
-    requirement, so the html bytes are shuffled ZERO times per crawl —
-    only the tiny frontier side moves each round."""
-    k = pages.withColumn("canonical_url", canonicalize_url("url")).filter(
-        F.col("canonical_url").isNotNull()
+def keyed_pages(pages: DataFrame) -> DataFrame:
+    """pages + canonical_url join key (null-canonical pages unreachable),
+    pre-partitioned by the key (the in-memory analog of storing the
+    warehouse pages table bucketed by canonical_url): the cached layout
+    then SATISFIES every round's fetch-join distribution requirement, so
+    the html bytes are shuffled ZERO times per crawl — only the tiny
+    frontier side moves each round."""
+    n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        pages.withColumn("canonical_url", canonicalize_url("url"))
+        .filter(F.col("canonical_url").isNotNull())
+        .repartition(n, F.col("canonical_url"))
     )
-    if cluster:
-        n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        k = k.repartition(n, F.col("canonical_url"))
-    return k
-
-
 
 
 def run_round(
@@ -202,7 +182,6 @@ def run_round(
     rank_offset: int,
     out_dir: str,
     default_budget: int = 1_000_000,
-    parse_impl: str = "jvm",
     boundary_mode: str = "continue",
     bloom: DataFrame | None = None,
     bloom_filter: BloomSeen | None = None,
@@ -212,10 +191,6 @@ def run_round(
 ) -> RoundResult:
     """Execute FROZEN SPEC steps 1-9 for round ``rnd`` and write the round's
     outputs (crawl_order, articles, lineage, frontier_next) under out_dir.
-
-    parse_impl: 'jvm' (whole-stage-codegen regexp/HOF expressions — default;
-    html never leaves the JVM) or 'arrow' (pandas UDF, one Arrow round-trip
-    per page). Both implement the same FROZEN RULES, byte-equal by test.
 
     metrics_full=False skips the metrics-only jobs (candidate/robots/new-url
     counts become -1); results are unchanged.
@@ -235,8 +210,7 @@ def run_round(
     which cut the measured main-thread construction phase from ~1.2 s to
     ~0.5 s per round.
     """
-    _t = time.monotonic()
-    C = _round_cols(parse_impl)
+    C = _round_cols()
     if n_frontier is None:
         n_frontier = frontier.count()
 
@@ -268,7 +242,6 @@ def run_round(
         candidates = unseen.unionByName(dedup_against_seen(maybe, seen)).persist()
     else:
         candidates = dedup_against_seen(frontier, seen).persist()
-    _t = _trace(f"round{rnd} construct:candidates", _t)
 
     # 2. robots gate
     allowed, blocked = robots_filter(candidates, robots)
@@ -289,12 +262,10 @@ def run_round(
     # the codegen cache (sized in session.py) makes rounds 1..R compile
     # nothing new — JIT cost becomes O(1) in the number of rounds, on a
     # real cluster as on this box.
-    _t = _trace(f"round{rnd} construct:politeness-split", _t)
     round_df = frontier.sparkSession.createDataFrame(
         [(rnd,)], schema="__round int"
     )
     fetched = fetched.crossJoin(F.broadcast(round_df)).persist()
-    _t = _trace(f"round{rnd} construct:round-df", _t)
 
     # 4. deterministic global order (scalable rank, not a single window).
     # The rank offsets are a LAZY subplan (operators/ranking.py) — no
@@ -335,14 +306,12 @@ def run_round(
         )
         write_table(df, os.path.join(out_dir, name), mode="overwrite")
 
-    _t = _trace(f"round{rnd} construct:rank", _t)
     fs = [
         pool.submit(_write, crawl_order, "crawl_order"),
         # the rank-offset counts collect: one small job over the (by then
         # cached) rank intermediate, overlapped with the writes
         pool.submit(rank_info.resolve),
     ]
-    _t = _trace(f"round{rnd} submit:crawl_order", _t)
 
     # 5. seen delta (not written — identical to crawl_order's url column)
     seen_delta = fetched.select("canonical_url")
@@ -369,16 +338,14 @@ def run_round(
             how="left",
         )
     )
-    # 7. parse: content + links + envelope in one pass over html (JVM exprs
-    # by default; parse_impl='arrow' moves content/title/links to a single
-    # Arrow round-trip while the envelope stays JVM-side); html is dropped
-    # before the cache so it is never buffered twice
+    # 7. parse: content + links + envelope in one pass over html (JVM
+    # exprs); html is dropped before the cache so it is never buffered
+    # twice
     parsed = (
         joined.filter(C["html_notnull"])
         .select(*C["parsed1"])
         .select(*C["parsed2"])
     )
-    _t = _trace(f"round{rnd} construct:parsed", _t)
     # full article envelope (schemas.ARTICLES; reference envelope
     # weibo.py:215-231, twitter.py:86-103): author/time/content_type/
     # version/raw passthrough/attachments, FROZEN ENVELOPE RULES; crawl
@@ -457,7 +424,6 @@ def run_round(
             _write_after, atts_new.observe(obs_atts, C["n"]), "attachments_new"
         )
     )
-    _t = _trace(f"round{rnd} submit:frontier+atts", _t)
     fs.append(
         pool.submit(
             _write_after, articles.observe(obs_articles, C["n"]), "articles"
@@ -467,7 +433,6 @@ def run_round(
         ["src_url", "dst_url"]
     )
     fs.append(pool.submit(_write_after, lineage, "lineage"))
-    _t = _trace(f"round{rnd} plan-construct+submit", _t)
 
     # metric-only count jobs join the same barrier: they read the persisted
     # frames the writes are materializing anyway, so they cost cache scans,
@@ -488,7 +453,6 @@ def run_round(
     for f in fs:
         f.result()
     pool.shutdown(wait=True)
-    _t = _trace(f"round{rnd} pooled-writes", _t)
     n_fetched = rank_info.total
     n_parsed = obs_articles.get["n"]
     n_miss = n_fetched - n_parsed
@@ -519,7 +483,6 @@ def run_round(
             str(k): v for k, v in rank_info.partition_counts.items()
         },
     }
-    _trace(f"round{rnd} metrics-gather", _t)
     return RoundResult(
         seen_delta=seen_delta,
         metrics=metrics,

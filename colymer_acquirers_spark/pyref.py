@@ -5,10 +5,10 @@ reference's frontier state machine (``colymer/acquirers/acquirer.py:8-78``:
 adopt/splice/advance over chain blocks; dedup boundary ``:21-22,46``;
 checkpoint-after-every-page ``:71-74``) generalized to a URL frontier. The
 engine's Spark plans must produce identical ``crawl_order`` / ``seen`` /
-``articles`` under any parallelism. Text extraction calls the *same* frozen
-pandas-series functions as the engine, so byte-identity holds by
-construction of the shared rule (the real test is Spark's distributed,
-Arrow-batched execution vs this serial loop).
+``articles`` under any parallelism. Text extraction calls the frozen
+pandas-series functions, the oracle versions of the engine's JVM expressions
+(byte-equality pinned by tests/test_parse_expr.py and test_parse_fuzz.py),
+so the real test is Spark's distributed execution vs this serial loop.
 
 FROZEN ROUND SPEC (round K over frontier F_K, seen set S, rank counter R):
 

@@ -25,7 +25,8 @@ def get_spark(
     - AQE on (runtime coalescing + skew-join splitting for hot hosts,
       the engine's analog of the reference's single-threaded politeness
       serialization never becoming a hotspot — SURVEY.md §4.2).
-    - Arrow on (every Python-side transform is a vectorized pandas UDF).
+    - Arrow on (the Python-side transforms — mapInPandas / applyInPandas —
+      run over Arrow batches).
     - shuffle partitions sized to the core count, not the 200 default.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))

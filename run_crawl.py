@@ -39,7 +39,8 @@ def main() -> int:
     ap.add_argument("--rounds", type=int, default=10)
     ap.add_argument("--default-budget", type=int, default=1_000_000)
     ap.add_argument("--master", default=None, help="override spark master")
-    ap.add_argument("--fresh", action="store_true", help="ignore existing checkpoints")
+    ap.add_argument("--fresh", action="store_true",
+                    help="discard all state in --workdir and start over")
     ap.add_argument("--boundary-mode", choices=["continue", "break"], default="continue")
     ap.add_argument("--use-bloom", action="store_true",
                     help="prefilter the seen-set anti-join with a "
@@ -48,7 +49,6 @@ def main() -> int:
                     default="bloom",
                     help="prefilter kind for --use-bloom (cuckoo supports "
                          "deletion for re-crawl eviction)")
-    ap.add_argument("--parse-impl", choices=["jvm", "arrow"], default="jvm")
     ap.add_argument("--fast-metrics", action="store_true",
                     help="skip metrics-only count jobs")
     ap.add_argument("--compact-every", type=int, default=8,
@@ -108,7 +108,6 @@ def main() -> int:
         max_rounds=args.rounds, default_budget=args.default_budget,
         resume=not args.fresh, boundary_mode=args.boundary_mode,
         use_bloom=args.use_bloom, bloom_filter=seen_filter,
-        parse_impl=args.parse_impl,
         metrics_full=not args.fast_metrics,
         compact_every=args.compact_every,
         reseed=reseed,

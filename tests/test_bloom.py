@@ -138,10 +138,16 @@ def test_plans_have_no_python_exec_node(spark):
         assert not [n for n in PY_EXEC_NODES if n in plan], plan
 
 
-def test_bloom_crawl_runs_no_python_exec_node(spark, tmp_path):
-    """Every SQL execution of a use_bloom crawl (read back from the session's
-    SQL status store) is free of Python exec nodes: a bloom crawl starts no
-    Python worker."""
+@pytest.mark.parametrize(
+    "use_bloom,boundary_mode",
+    [(True, "continue"), (False, "continue"), (False, "break")],
+    ids=["bloom", "exact", "break"],
+)
+def test_bloom_crawl_runs_no_python_exec_node(spark, tmp_path, use_bloom, boundary_mode):
+    """Every SQL execution of a crawl (read back from the session's SQL
+    status store) is free of Python exec nodes, with the bloom tier, with
+    the exact tier alone and in break mode: a crawl starts no Python
+    worker."""
     from colymer_acquirers_spark.plans.crawl import run_crawl
     from colymer_acquirers_spark.sources.synth import (
         synth_pages,
@@ -160,7 +166,7 @@ def test_bloom_crawl_runs_no_python_exec_node(spark, tmp_path):
     before = max((i for i, _ in executions()), default=-1)
     run_crawl(spark, synth_pages(spark, 150), synth_seeds(spark, 6),
               synth_politeness(spark), synth_robots(spark), str(tmp_path / "wd"),
-              max_rounds=2, use_bloom=True)
+              max_rounds=2, use_bloom=use_bloom, boundary_mode=boundary_mode)
     crawl = [(i, plan) for i, plan in executions() if i > before]
     assert crawl
     bad = [(i, n) for i, plan in crawl for n in PY_EXEC_NODES if n in plan]

@@ -194,3 +194,36 @@ def test_compaction_identical_and_bounded_reads(spark, web, tmp_path_factory):
     run_crawl(spark, pages, seeds, pol, rob, wd_res, max_rounds=ROUNDS,
               compact_every=1)
     pd.testing.assert_frame_equal(_order(spark, wd_none), _order(spark, wd_res))
+
+
+def test_fresh_run_ignores_stale_workdir_state(spark, web, tmp_path_factory):
+    """resume=False (run_crawl.py --fresh) in a workdir holding an earlier
+    run's rounds, compactions, evictions and initial seen set must equal
+    the same crawl in a clean workdir: none of that state may leak in."""
+    import os
+
+    from colymer_acquirers_spark.plans.crawl import evict_seen, read_seen
+
+    pages, seeds, pol, rob = web
+    pre = pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 0).select(
+        F.col("url").alias("canonical_url")
+    )
+    wd_stale = str(tmp_path_factory.mktemp("stale"))
+    run_crawl(spark, pages, seeds, pol, rob, wd_stale, max_rounds=ROUNDS,
+              compact_every=1, initial_seen=pre)
+    evict_seen(spark, wd_stale, read_output(spark, wd_stale, "crawl_order")
+               .select("url").limit(5))
+    # a different seed set: ids 10..19 instead of 0..9
+    seeds2 = synth_seeds(spark, 20).exceptAll(seeds)
+    # compact_every=2: round 1 reads the seen state at round 0, which only
+    # the stale run compacted
+    kw = dict(max_rounds=ROUNDS, compact_every=2)
+    run_crawl(spark, pages, seeds2, pol, rob, wd_stale, resume=False, **kw)
+    wd_clean = str(tmp_path_factory.mktemp("clean"))
+    run_crawl(spark, pages, seeds2, pol, rob, wd_clean, **kw)
+
+    pd.testing.assert_frame_equal(_order(spark, wd_stale), _order(spark, wd_clean))
+    assert sorted(os.listdir(wd_stale)) == sorted(os.listdir(wd_clean))
+    seen = [set(read_seen(spark, wd, ROUNDS - 1).toPandas()["canonical_url"])
+            for wd in (wd_stale, wd_clean)]
+    assert seen[0] == seen[1]

@@ -97,6 +97,23 @@ def test_minhash_signatures_word_sets_path_identical(docs):
     assert direct == shared
 
 
+@pytest.mark.parametrize(
+    "cols",
+    [("__ws", "doc_id"), ("doc_id",), ("doc_id", "__ws", "text"), ("doc_id", "words")],
+    ids=["reordered", "missing", "extra", "misnamed"],
+)
+def test_minhash_signatures_rejects_misshaped_word_sets(docs, cols):
+    """word_sets= must be exactly (id_col, "__ws"): a frame with the columns
+    reordered, missing, extra or misnamed raises instead of hashing the
+    wrong column."""
+    words = docs.select(
+        "doc_id", "text",
+        F.array_distinct(F.split(F.col("text"), " ")).alias("__ws"),
+    ).withColumn("words", F.col("__ws")).select(*cols)
+    with pytest.raises(ValueError, match="word_sets"):
+        minhash_signatures(docs, "doc_id", "text", 8, word_sets=words)
+
+
 def test_minhash_lsh_finds_dups(docs):
     # 8 bands × 2 rows: P(collide) ≈ 1-(1-j²)⁸ ≈ 0.9995 at j ≈ 0.78
     pairs = {(r["id_a"], r["id_b"]) for r in

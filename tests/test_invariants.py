@@ -209,7 +209,7 @@ def test_fragment_caches_cleared_on_new_gateway(spark):
     from colymer_acquirers_spark.plans.round import _round_cols
 
     assert fragments._CACHES, "no fragment caches registered"
-    _round_cols("jvm")  # populate at least one cache
+    _round_cols()  # populate at least one cache
     assert _round_cols.cache_info().currsize > 0
 
     before = fragments._GATEWAY_ID
@@ -243,7 +243,7 @@ def test_fragment_caches_survive_session_restart_and_round_runs(tmp_path):
             synth_pages, synth_politeness, synth_robots, synth_seeds)
 
         s1 = get_spark(app_name="gw1", master="local[2]", shuffle_partitions=4)
-        _round_cols("jvm")
+        _round_cols()
         assert _round_cols.cache_info().currsize > 0
         gw = fragments._GATEWAY_ID
         s1.stop()
@@ -268,3 +268,26 @@ def test_fragment_caches_survive_session_restart_and_round_runs(tmp_path):
     )
     assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
     assert "RESTART_OK" in r.stdout
+
+
+def test_no_module_level_python_udf():
+    """Each frozen rule has one Spark-side implementation, the JVM
+    expression: no module of the package defines a module-level Python UDF
+    (anything carrying ``evalType``). Importing every module also catches an
+    import left dangling by a deleted name."""
+    import importlib
+    import pkgutil
+
+    import colymer_acquirers_spark as pkg
+
+    names = [pkg.__name__] + [
+        m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+    ]
+    udfs = [
+        f"{name}.{attr}"
+        for name in names
+        for attr, obj in vars(importlib.import_module(name)).items()
+        if hasattr(obj, "evalType")
+    ]
+    assert len(names) > 20, names
+    assert not udfs, udfs
